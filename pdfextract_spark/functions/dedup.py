@@ -315,9 +315,11 @@ def connected_components(pairs: DataFrame) -> DataFrame:
 
 
 def sql_connected_components(pairs_sql: str) -> str:
-    """DuckDB oracle: min id reachable from each node (recursive CTE)."""
+    """DuckDB oracle: min id reachable from each node (recursive CTE).
+    `pair_edges` is MATERIALIZED: inlined, every recursion step re-runs
+    `pairs_sql`."""
     return f"""
-WITH RECURSIVE pair_edges AS (
+WITH RECURSIVE pair_edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM ({pairs_sql})
   UNION
   SELECT doc_b AS src, doc_a AS dst FROM ({pairs_sql})

@@ -215,7 +215,7 @@ def _sql_base(table: str, n_streams: int, cost_sql: str | None = None) -> str:
     stream = f"CAST((('0x' || substr({h}, 1, 4))::BIGINT % {n_streams}) AS INT)"
     cost = cost_sql or "len(string_split(text, ' '))"
     return f"""
-base AS (
+base AS MATERIALIZED (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, {stream} AS stream,
          CAST({cost} AS INT) AS n_tokens,
          ROW_NUMBER() OVER (PARTITION BY {stream} ORDER BY CAST(doc_id AS BIGINT)) AS rn
@@ -225,7 +225,8 @@ base AS (
 def _sql_pack(
     table: str, budget: int, n_streams: int, cost_sql: str | None = None
 ) -> str:
-    """Recursive-CTE replay of the greedy fold (rn = fold step per stream)."""
+    """Recursive-CTE replay of the greedy fold (rn = fold step per stream).
+    `base` is MATERIALIZED: inlined, every recursion step re-derives it."""
     return f"""
 WITH RECURSIVE {_sql_base(table, n_streams, cost_sql)},
 pack AS (
@@ -256,7 +257,8 @@ def sql_pack_by_split(
 ) -> str:
     """Mirror of pack_by_split: the leakage-safe assign CTE joined onto the
     costed corpus, then the recursive greedy fold partitioned on
-    (split, stream) with a per-split budget CASE."""
+    (split, stream) with a per-split budget CASE; `base` is MATERIALIZED as
+    in _sql_pack."""
     from .curation import _sql_assign
 
     budgets = dict(SPLIT_BUDGETS if budgets is None else budgets)
@@ -267,7 +269,7 @@ def sql_pack_by_split(
     stream = f"CAST((('0x' || substr({h}, 1, 4))::BIGINT % {n_streams}) AS INT)"
     return f"""
 WITH RECURSIVE {_sql_assign(table)},
-base AS (
+base AS MATERIALIZED (
   SELECT CAST(d.doc_id AS VARCHAR) AS doc_id, a.split, {stream} AS stream,
          CAST(len(string_split(d.text, ' ')) AS INT) AS n_tokens,
          ROW_NUMBER() OVER (PARTITION BY a.split, {stream}

@@ -10,11 +10,12 @@ writes) stays in the native Column API.
 Scale design:
 - ``repartition`` (optional) only to balance batch sizes across executors —
   at cluster scale prefer a well-bucketed input table over a runtime shuffle
-- skewed oversized docs: the corpus has a ~0.1% band of ~100x docs;
-  ``split_oversized`` splits their span arrays into page-sized chunks that are
-  extracted independently and re-sequenced (pages are independent until the
-  final per-doc ordering — SURVEY.md §7 known-hard #4). Round 1 keeps them
-  whole; the banding hook is here.
+- skewed oversized docs: the corpus has a ~0.1% band of ~100x docs.
+  ``pipeline.run_extraction`` routes them through ``operators.extract_paged``
+  (stage A/B/C over (doc_id, page): pages are independent until the final
+  per-doc ordering — SURVEY.md §7 known-hard #4), or, with
+  ``page_parallel_oversize=False``, through this operator one document per
+  task (``pipeline.band_for_extraction``).
 - per-doc failures are quarantined, not fatal (TextExtractor.java:124-131
   analog): errors become rows in a quarantine output with kind='error'.
 """

@@ -17,9 +17,23 @@ Design for 10^12 documents (north rule):
   Arrow batch and one task stall its whole partition. Extraction batches are
   therefore split by size band: small docs flow in large batches; oversized
   docs (span_count > threshold) are repartitioned round-robin so each lands
-  alone in a task. Page-level splitting of a single huge doc is legal until
-  the final doc ordering (SURVEY.md §7 known-hard #4) and is the next band if
-  single docs outgrow a task (not needed at current corpus shapes).
+  alone in a task, or (the default) fan out over (doc_id, page) through the
+  page-parallel operator. One aggregate per run lists the buckets that hold
+  oversized documents; only those buckets build the oversized branch.
+
+- **Task budget (one narrow task per core per bucket wave).** Every Python
+  task costs ~0.3 s of fixed overhead regardless of its input: on a 4-core
+  `local[4]` session 64 empty `mapInPandas` tasks take 4.7-5.6 s with reused
+  workers, 64 JVM-only tasks 0.3-0.5 s. The cause is in PySpark, not here:
+  `worker_util.setup_spark_files` calls `importlib.invalidate_caches()` for
+  every task, which on Python < 3.13 makes each zipimporter on the worker's
+  path re-read its archive's directory (Spark puts `pyspark.zip`, the py4j
+  zip and the spark-core jar there). The pipeline therefore launches as few
+  Python tasks as keep the cores busy: `workers` buckets run at once, so each
+  bucket's narrow extraction gets `ceil(parallelism / workers)` partitions
+  (`narrow_partitions`) and a wave of in-flight buckets fills the cores about
+  once. The manifest commit is a one-row JVM-only DataFrame (`spark.range`
+  plus literals): one JVM task, no Python task.
 
 - **Quarantine.** Per-doc failures inside the UDF become `kind='error'` rows
   (TextExtractor.java:124-131 analog); they are split out of the main output
@@ -28,16 +42,22 @@ Design for 10^12 documents (north rule):
 
 - **Metrics.** The manifest doubles as the extraction-metrics table:
   docs/sec per bucket, error rates, span counts — queryable with plain SQL.
+  `ts` is the bucket's commit time (local, millisecond precision) and
+  `ts - wall_s` its start, so a run's wall clock is the span from the first
+  start to the last commit even when buckets overlap.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 from dataclasses import dataclass
+from datetime import datetime
 from typing import List, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import CONFIG, EngineConfig
@@ -82,22 +102,30 @@ def with_bucket(documents: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def narrow_partitions(parallelism: int, workers: int) -> int:
+    """Partitions for one bucket's narrow extraction while `workers` buckets
+    run at once: together the in-flight buckets fill `parallelism` cores
+    about once, so no core runs a second fixed-cost Python task per wave."""
+    return max(1, math.ceil(parallelism / workers))
+
+
 def band_for_extraction(
-    documents: DataFrame, cfg: EngineConfig = CONFIG, parallelism: int = 32
+    documents: DataFrame, cfg: EngineConfig = CONFIG, parallelism: int = 32,
+    workers: int = 1,
 ) -> DataFrame:
     """Size-banded repartition: oversized docs one-per-task, small docs in
-    round-robin batches. Returns a union with identical schema; the extract
-    operator is band-agnostic."""
+    `narrow_partitions(parallelism, workers)` round-robin batches. Returns a
+    union with identical schema; the extract operator is band-agnostic."""
     sized = documents.withColumn("_n_spans", F.size("spans"))
     small = sized.filter(F.col("_n_spans") <= cfg.oversize_span_threshold)
     big = sized.filter(F.col("_n_spans") > cfg.oversize_span_threshold)
-    # unconditional union: the old `big.limit(1).count()` existence probe
-    # launched an extra scan job per bucket whose worst case (NO oversized
-    # docs — the common case) read the whole bucket before concluding the
-    # branch was empty. An empty `big` branch through the union costs only
-    # an empty exchange whose partitions AQE coalesces away.
+    # unconditional union: an empty `big` branch costs only an empty
+    # exchange (AQE coalesces its partitions away) and no Python task, since
+    # both bands feed ONE mapInPandas. The page-parallel route in
+    # run_extraction instead consults the run's oversized-bucket list,
+    # because its branch has its own Python stages.
     return (
-        small.repartition(parallelism * 4)
+        small.repartition(narrow_partitions(parallelism, workers))
         .unionByName(big.repartition(parallelism))
         .drop("_n_spans")
     )
@@ -124,10 +152,21 @@ def write_bucketed_spans(
 
 
 def read_manifest(spark: SparkSession, output_path: str) -> Optional[DataFrame]:
+    """The manifest, or None when no bucket has been committed yet. Existence
+    is checked through the Hadoop FileSystem of the path (local, HDFS, object
+    stores alike) so a fresh output path costs one metadata call, not a
+    failed Spark read and its Java stack trace."""
     path = os.path.join(output_path, "manifest")
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return None
     try:
         return spark.read.parquet(path)
-    except Exception:
+    except AnalysisException:
+        # a manifest dir with no committed file yet (crash inside the first
+        # commit) has no schema to infer
         return None
 
 
@@ -164,6 +203,17 @@ def run_extraction(
     and the manifest append itself is serialized under a lock because
     concurrent appends share one staging dir.
 
+    Task budget: with `workers = min(concurrency, len(todo))` buckets in
+    flight, each bucket's narrow extraction runs as
+    `ceil(parallelism / workers)` Python tasks, so a wave of buckets fills
+    the cores about once. More, smaller tasks only add cost: each Python task
+    pays ~0.3 s of fixed start-up (PySpark's per-task
+    `importlib.invalidate_caches()` makes every zipimporter re-read its
+    archive; see the module docstring). At four tasks per core per
+    bucket that start-up was ~3/4 of a 1,000-doc flat-text job's task time
+    on a 4-core host. The manifest commit is a one-row JVM-only DataFrame
+    and launches no Python task.
+
     Per-bucket metrics come from ONE aggregate over the persisted spans
     (count / error count / distinct docs) instead of three separate count
     actions; n_docs therefore counts documents that produced output or an
@@ -173,7 +223,9 @@ def run_extraction(
     page_parallel_oversize routes the oversized band through the
     page-parallel operator (operators/extract_paged.py): a single
     10k-page document fans out over (doc_id, page) instead of stalling
-    one task — the skew band beyond one-doc-per-task."""
+    one task — the skew band beyond one-doc-per-task. Which buckets hold
+    oversized documents is computed once per run, before any bucket starts,
+    so the other buckets never build (or probe) that branch."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
@@ -183,7 +235,16 @@ def run_extraction(
 
     buckets_skipped = [b for b in range(n_buckets) if b in done]
     todo = [b for b in range(n_buckets) if b not in done]
+    workers = max(1, min(concurrency, len(todo)))
+    n_narrow = narrow_partitions(parallelism, workers)
     manifest_lock = threading.Lock()
+    oversized = set()
+    if page_parallel_oversize and todo:
+        oversized = {
+            int(r.doc_bucket)
+            for r in docs.filter(F.size("spans") > cfg.oversize_span_threshold)
+            .select("doc_bucket").distinct().collect()
+        }
 
     def process_bucket(b: int):
         t0 = time.perf_counter()
@@ -191,24 +252,20 @@ def run_extraction(
         if page_parallel_oversize:
             from .operators.extract_paged import extract_spans_paged
 
-            sized = bucket_docs.withColumn("_n_spans", F.size("spans"))
-            small = sized.filter(
-                F.col("_n_spans") <= cfg.oversize_span_threshold
-            ).drop("_n_spans")
-            big = sized.filter(
-                F.col("_n_spans") > cfg.oversize_span_threshold
-            ).drop("_n_spans")
-            spans = extract_spans(small.repartition(parallelism * 4), cfg,
+            n_spans = F.size("spans")
+            small = bucket_docs.filter(n_spans <= cfg.oversize_span_threshold)
+            spans = extract_spans(small.repartition(n_narrow), cfg,
                                   num_partitions=-1)
-            if big.limit(1).count():
+            if b in oversized:
+                big = bucket_docs.filter(n_spans > cfg.oversize_span_threshold)
                 spans = spans.unionByName(
                     extract_spans_paged(big, cfg,
                                         page_partitions=parallelism * 2,
                                         doc_partitions=parallelism)
                 )
         else:
-            banded = band_for_extraction(bucket_docs, cfg, parallelism)
-            spans = extract_spans(banded, cfg)
+            banded = band_for_extraction(bucket_docs, cfg, parallelism, workers)
+            spans = extract_spans(banded, cfg, num_partitions=-1)
         spans.persist()
         try:
             stats = spans.agg(
@@ -230,16 +287,20 @@ def run_extraction(
                 spans.filter(F.col("kind") == "error").write.mode(
                     "overwrite"
                 ).parquet(os.path.join(output_path, "quarantine", f"bucket={b}"))
-            wall = time.perf_counter() - t0
-            row = spark.createDataFrame(
-                [(b, n_docs, n_spans_all - n_errors, n_errors, float(round(wall, 3)),
-                  time.strftime("%Y-%m-%dT%H:%M:%S"))],
-                schema="bucket int, n_docs long, n_spans long, n_errors long, "
-                       "wall_s double, ts string",
-            )
             # manifest append is the commit point: a bucket is 'done' only
-            # after its output files are fully written
+            # after its output files are fully written. Timed under the lock,
+            # so a bucket's wall includes waiting for its commit turn.
             with manifest_lock:
+                wall = time.perf_counter() - t0
+                # JVM-only one-row frame: one task, no Python worker round trip
+                row = spark.range(1, numPartitions=1).select(
+                    F.lit(b).cast("int").alias("bucket"),
+                    F.lit(n_docs).cast("long").alias("n_docs"),
+                    F.lit(n_spans_all - n_errors).cast("long").alias("n_spans"),
+                    F.lit(n_errors).cast("long").alias("n_errors"),
+                    F.lit(round(wall, 3)).cast("double").alias("wall_s"),
+                    F.lit(datetime.now().isoformat(timespec="milliseconds")).alias("ts"),
+                )
                 row.write.mode("append").parquet(
                     os.path.join(output_path, "manifest")
                 )
@@ -250,7 +311,7 @@ def run_extraction(
     buckets_done: List[int] = []
     total_docs = total_spans = total_errors = 0
     if todo:
-        with ThreadPoolExecutor(max_workers=max(1, min(concurrency, len(todo)))) as ex:
+        with ThreadPoolExecutor(max_workers=workers) as ex:
             for b, n_docs, n_spans, n_errors in ex.map(process_bucket, todo):
                 buckets_done.append(b)
                 total_docs += n_docs
@@ -267,23 +328,33 @@ def run_extraction(
 
 
 def metrics_summary(spark: SparkSession, output_path: str) -> str:
+    """Run totals from the manifest. `wall_s` is the wall-clock span of the
+    committed buckets, first start (`ts - wall_s`) to last commit (`ts`), so
+    `docs_per_sec` stays true when buckets run concurrently; `bucket_wall_s`
+    is the sum of per-bucket walls. `ts` parses with or without fractional
+    seconds (manifests written before millisecond timestamps)."""
     m = read_manifest(spark, output_path)
     if m is None:
         return json.dumps({"buckets": 0})
+    end = F.unix_micros(F.to_timestamp("ts")) / 1e6
     agg = m.agg(
         F.count(F.lit(1)).alias("buckets"),
         F.sum("n_docs").alias("docs"),
         F.sum("n_spans").alias("spans"),
         F.sum("n_errors").alias("errors"),
-        F.sum("wall_s").alias("wall_s"),
+        F.sum("wall_s").alias("bucket_wall_s"),
+        F.max(end).alias("t_end"),
+        F.min(end - F.col("wall_s")).alias("t_start"),
     ).collect()[0]
+    wall = agg.t_end - agg.t_start if agg.t_end is not None else 0.0
     return json.dumps(
         {
             "buckets": agg.buckets,
             "docs": int(agg.docs or 0),
             "spans": int(agg.spans or 0),
             "errors": int(agg.errors or 0),
-            "wall_s": float(agg.wall_s or 0.0),
-            "docs_per_sec": round((agg.docs or 0) / agg.wall_s, 2) if agg.wall_s else None,
+            "wall_s": round(wall, 3),
+            "bucket_wall_s": float(agg.bucket_wall_s or 0.0),
+            "docs_per_sec": round((agg.docs or 0) / wall, 2) if wall > 0 else None,
         }
     )

@@ -3,10 +3,14 @@ import sys
 
 import pytest
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
+REPO_ROOT = os.path.dirname(TESTS_DIR)
 sys.path.insert(0, REPO_ROOT)
-# Arrow/pandas UDF workers must import pdfextract_spark
-os.environ["PYTHONPATH"] = REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
+# Arrow/pandas UDF workers must import pdfextract_spark, and the worker
+# daemon must import spark_worker_daemon
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO_ROOT, TESTS_DIR, os.environ.get("PYTHONPATH", "")]
+)
 
 
 @pytest.fixture(scope="session")
@@ -22,6 +26,8 @@ def spark():
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
+        # fork Python workers whose tasks skip re-reading Spark's archives
+        .config("spark.python.daemon.module", "spark_worker_daemon")
         .getOrCreate()
     )
     yield spark

@@ -95,7 +95,17 @@ def test_streaming_dedup_with_ttl_runs_and_dedups(spark, doc_batches, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # with ProcessingTimeTimeout every micro-batch asks for another (a timeout
+    # may fire at any time), so this availableNow query never terminates on
+    # its own: wait until committed batches have read all the input, then
+    # stop it rather than leave it running for the rest of the session
+    try:
+        deadline = time.monotonic() + 120
+        while (sum(p["numInputRows"] for p in q.recentProgress)
+               < len(b1) + len(b2) and time.monotonic() < deadline):
+            time.sleep(0.2)
+    finally:
+        q.stop()
     rows = spark.read.parquet(out).collect()
     keepers = {r["keeper_doc_id"] for r in rows}
     assert len(rows) == 3 and keepers == {"a", "c", "e"}
